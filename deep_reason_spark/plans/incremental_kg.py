@@ -59,17 +59,18 @@ therefore folds only the core tables + state (all O(batch + affected))
 and :func:`refresh_derived_tables` re-derives the rollups on a cadence —
 at any refresh point the stored graph equals the full rebuild exactly.
 
-Storage protocol: updated tables are written to a staging dir and swapped
-in with an atomic directory rename (the lazily-read old table must never
-be overwritten mid-read; a cluster deployment uses a transactional table
-format or the HDFS rename for the same reason). State lives under
+Storage protocol: the one write wave of every graph-table writer
+(``kg_pipeline.run_write_wave``) stages each updated table and swaps it
+in with an atomic directory rename once every staged write succeeded (the
+lazily-read old table must never be overwritten mid-read; a cluster
+deployment uses a transactional table format or the HDFS rename for the
+same reason). State lives under
 ``out_dir`` next to the stage tables: ``entity_blocks`` (vocabulary-scale)
 ``entity_titles`` and ``entity_degrees`` (entity-scale)."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,23 +94,18 @@ from deep_reason_spark.operators.graph import (
     widen_degree_affected,
 )
 from deep_reason_spark.operators.linking import build_surface_map
-from deep_reason_spark.operators.ontology import build_ontology
 from deep_reason_spark.plans.kg_pipeline import (
-    COMMUNITIES_DIR,
-    N_BUCKETS,
-    COMMUNITY_REPORTS_DIR,
     EDGES_DIR,
-    KG_NODES_DIR,
-    KG_TRIPLETS_DIR,
     MAPPING_DIR,
+    N_BUCKETS,
     NODES_DIR,
-    ONTOLOGY_CONNECTIONS_DIR,
-    ONTOLOGY_NODES_DIR,
-    ONTOLOGY_RELATIONS_DIR,
-    build_community_tables,
+    TableWrite,
     canonical_entity_types,
-    kg_nodes_table,
-    kg_triplets_table,
+    derived_table_writes,
+    run_write_wave,
+    write_bucketed,
+    write_plain,
+    write_vocab,
 )
 
 BLOCKS_DIR = "entity_blocks"
@@ -192,8 +188,7 @@ def init_incremental_state(
     state tables. Call once after the initial full build."""
     sm = build_surface_map(triples, alias_dict).localCheckpoint()
     ids, _, blocks = _ids_blocks_titles(sm)
-    blocks.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, BLOCKS_DIR))
+    write_vocab(blocks, os.path.join(out_dir, BLOCKS_DIR))
     mapping = spark.read.parquet(os.path.join(out_dir, MAPPING_DIR))
     titles = (
         ids.join(broadcast_if_small(mapping), "entity_id")
@@ -201,65 +196,15 @@ def init_incremental_state(
         .agg(longest_name("canonical_name")
              .alias("title"))
     )
-    titles.write.mode("overwrite").parquet(os.path.join(out_dir, TITLES_DIR))
+    write_plain(titles, os.path.join(out_dir, TITLES_DIR))
     # degree state (node → distinct undirected neighbors): lets updates
     # maintain combined_degree for O(degree-affected) rows instead of the
     # two full-edge-table shuffle joins add_combined_degree costs
-    degrees_from_edges(
-        spark.read.parquet(os.path.join(out_dir, EDGES_DIR))
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, DEGREES_DIR))
+    write_plain(
+        degrees_from_edges(spark.read.parquet(os.path.join(out_dir, EDGES_DIR))),
+        os.path.join(out_dir, DEGREES_DIR))
     _write_state_manifest(out_dir)
     bump_estimate_epoch()
-
-
-def _stage(df: DataFrame, path: str, writer) -> None:
-    """Write ``df`` to the staging sibling of ``path`` — ``df`` may lazily
-    read the table being replaced, so an in-place overwrite would corrupt
-    its own input; the swap happens later, after EVERY staged write has
-    finished (``_swap_in``)."""
-    staging = path + "__staging"
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    writer(df, staging)
-
-
-def _swap_in(path: str) -> None:
-    """Atomically promote the staged sibling of ``path`` (a cluster
-    deployment uses a transactional table format or the HDFS rename for
-    the same reason)."""
-    old = path + "__old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(path + "__staging", path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def _swap_in_buckets(path: str, buckets: list[int]) -> None:
-    """Partition-pruned promotion: replace ONLY the listed ``bucket=``
-    partitions of ``path`` from its staged sibling; untouched partitions
-    (files, not just rows) stay exactly as written by earlier batches. A
-    bucket absent from staging was emptied by the update (every row moved
-    out by a relabel) and is removed. Same rename-level atomicity and the
-    same residual crash window as the table-level ``_swap_in`` — per
-    bucket instead of per table; a transactional catalog commits the
-    partition list in one operation on a cluster."""
-    staging = path + "__staging"
-    for b in buckets:
-        src = os.path.join(staging, f"bucket={b}")
-        dst = os.path.join(path, f"bucket={b}")
-        old = dst + "__old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-    shutil.rmtree(staging, ignore_errors=True)
 
 
 def run_incremental_kg_update(
@@ -293,10 +238,9 @@ def run_incremental_kg_update(
     ``entity_types`` / ``community_*`` mirror the full stage's knobs and
     must be passed the same values the initial build used, or the derived
     tables diverge from a full rebuild by design. ``wall_ms`` (optional
-    dict) receives per-phase laps keyed ``inc.<phase>``."""
+    dict) receives per-phase laps keyed ``inc.<phase>`` and per-table
+    write walls keyed ``inc.write.<table>``."""
     import time
-
-    from deep_reason_spark.sources.checkpoint import write_partitioned
 
     _validate_state_manifest(out_dir)
     _last = [time.monotonic()]
@@ -509,41 +453,13 @@ def run_incremental_kg_update(
         )
         _lap("buckets")
 
-    # ---- derived tables: SHARED builders over the pinned edge_agg ----------
+    # ---- builds + the staged write wave ------------------------------------
     # communities / ontology / KgStructure / nodes all derive from the
     # updated edge aggregate + titles + types at EDGE scale — never a
-    # corpus rescan — via the exact builder functions run_graph_stage
-    # writes with, so each refreshed table equals its full-rebuild twin.
-    # Like the full stage, the three builds overlap in their own FAIR
-    # scheduler pools (the update is fixed-latency-bound at this layer;
-    # jobs within one pool are FIFO, pools are fair against each other).
+    # corpus rescan — via the derived-table builder run_graph_stage writes
+    # with, so each refreshed table equals its full-rebuild twin.
     canonical_types = canonical_entity_types(spark, new_mapping, entity_types)
-    ctypes = canonical_types.withColumnRenamed("canonical_id", "entity_id")
-    edge_pairs = edge_agg.select(
-        F.col("source").alias("subject_id"),
-        F.col("target").alias("object_id"),
-        F.col("description").alias("predicate"),
-    )
 
-    def _pooled(pool: str, fn):
-        def run():
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-            return fn()
-        return run
-
-    def _onto_cp():
-        onodes_, orels_, oconns_ = build_ontology(edge_pairs, ctypes)
-        return onodes_, orels_.localCheckpoint(), oconns_
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    build_pool = ThreadPoolExecutor(max_workers=3)
-    fut_comm = fut_onto = None
-    if refresh_derived:
-        fut_comm = build_pool.submit(_pooled("cc", lambda: build_community_tables(
-            edge_agg, min_weight=community_min_weight,
-            max_degree=community_max_degree, salt=salt)))
-        fut_onto = build_pool.submit(_pooled("ontology", _onto_cp))
     # node rows can change ONLY for ids in D (frequency/degree/description
     # aggregate incident edges — all routed into `touched` for D-nodes;
     # titles/types change only inside D by construction), so the sparse
@@ -562,105 +478,47 @@ def run_incremental_kg_update(
                   "id")
             .localCheckpoint())
 
-    fut_nodes = build_pool.submit(_pooled("nodes", _node_build))
-    _lap("builds")  # submission only — the build futures resolve under
-    # the write wave, so their wall rides in inc.writes (BASELINE.md
-    # "builds (submission)" row; same reading rule as graph.builds)
-
-    def _nodes_keep(pruned: bool):
+    def _nodes(built, pruned: bool) -> DataFrame:
+        # stored rows outside D ∪ the rebuilt D rows; `pruned` reads only
+        # the affected bucket partitions (the staged write), the lazy full
+        # view feeds the entity-scale kg_nodes projection
+        if dense:
+            return built("nodes")
         keep = old_nodes.where(F.col("bucket").isin(node_buckets)) \
             if pruned else old_nodes
         return keep.drop("bucket").join(
             broadcast_if_small(affected.withColumnRenamed("aid", "id")),
-            "id", "left_anti")
+            "id", "left_anti").unionByName(built("nodes"))
 
-    def _nodes_staged():
-        if dense:
-            return fut_nodes.result()
-        return _nodes_keep(pruned=True).unionByName(fut_nodes.result())
-
-    def _full_nodes():
-        # lazy full view (stored bulk ∪ dirty) for the entity-scale
-        # kg_nodes projection, which is not bucket-stored
-        if dense:
-            return fut_nodes.result()
-        return _nodes_keep(pruned=False).unionByName(fut_nodes.result())
+    builds, derived = derived_table_writes(
+        edge_agg, canonical_types,
+        nodes=lambda built: _nodes(built, pruned=False), salt=salt,
+        community_min_weight=community_min_weight,
+        community_max_degree=community_max_degree,
+    ) if refresh_derived else ({}, [])
+    builds["nodes"] = _node_build
 
     # ---- blocks state: min is associative ----------------------------------
     merged_blocks = (
         old_blocks.unionByName(new_blocks)
         .groupBy("blk").agg(F.min("rep").alias("rep"))
     )
+    _lap("builds")  # planning only — the builds resolve under the write
+    # wave, so their wall rides in inc.writes (BASELINE.md "builds
+    # (submission)" row; same reading rule as graph.builds)
 
-    # ---- stage every table, then swap all in --------------------------------
-    def plain(df, path):
-        df.write.mode("overwrite").parquet(path)
-
-    def vocab(df, path):
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-
-    def bucketed(key):
-        def w(df, path):
-            write_partitioned(
-                df.withColumn("bucket",
-                              F.pmod(F.xxhash64(key), F.lit(N_BUCKETS)).cast("int")),
-                path)
-        return w
-
-    # every table is ready or riding a build future — stage all twelve
-    # CONCURRENTLY, the graph stage's write-wave pattern (job submission is
-    # thread-safe; the r5 profile showed a serial write chain costing ~7 s
-    # of fixed commit latency per update). Thunks, not frames: the
-    # independent writes (mapping, blocks, titles, edges) start immediately
-    # while the build futures resolve under the wave.
-    wave = [
-        (lambda: new_mapping, MAPPING_DIR, plain),
-        (lambda: merged_blocks, BLOCKS_DIR, vocab),
-        (lambda: new_titles, TITLES_DIR, plain),
-        (lambda: new_degrees, DEGREES_DIR, plain),
-        (lambda: edges_staged, EDGES_DIR, bucketed("source")),
-        (lambda: _nodes_staged(), NODES_DIR, bucketed("id")),
-    ]
-    if refresh_derived:
-        wave += [
-            (lambda: fut_onto.result()[0], ONTOLOGY_NODES_DIR, vocab),
-            (lambda: fut_onto.result()[1], ONTOLOGY_RELATIONS_DIR, vocab),
-            (lambda: fut_onto.result()[2], ONTOLOGY_CONNECTIONS_DIR, vocab),
-            (lambda: kg_nodes_table(_full_nodes()), KG_NODES_DIR, plain),
-            (lambda: kg_triplets_table(edge_pairs, ctypes,
-                                       fut_onto.result()[1]),
-             KG_TRIPLETS_DIR, plain),
-            (lambda: fut_comm.result()[0], COMMUNITIES_DIR, plain),
-            (lambda: fut_comm.result()[1], COMMUNITY_REPORTS_DIR, plain),
-        ]
     # edges/nodes promote per affected bucket partition; the rest per table
-    pruned_swaps = {EDGES_DIR: edge_buckets, NODES_DIR: node_buckets}
-    swap_dirs = [dir_ for _t, dir_, _w in wave if dir_ not in pruned_swaps]
-    try:
-        with ThreadPoolExecutor(max_workers=len(wave)) as side:
-            futs = [
-                side.submit(
-                    lambda t=thunk, p=os.path.join(out_dir, dir_), w=w_:
-                    _stage(t(), p, w))
-                for thunk, dir_, w_ in wave
-            ]
-            for f in futs:
-                f.result()
-    except BaseException:
-        # a failed staging write must not leave build threads running
-        # Spark jobs after this function has raised (same contract as
-        # run_graph_stage, ADVICE r4) — and no table is swapped in, so
-        # the stored graph stays the pre-update state
-        build_pool.shutdown(wait=True, cancel_futures=True)
-        raise
-    else:
-        build_pool.shutdown(wait=False)
+    run_write_wave(spark, out_dir, builds, [
+        TableWrite(MAPPING_DIR, lambda built: new_mapping, write_plain),
+        TableWrite(BLOCKS_DIR, lambda built: merged_blocks, write_vocab),
+        TableWrite(TITLES_DIR, lambda built: new_titles, write_plain),
+        TableWrite(DEGREES_DIR, lambda built: new_degrees, write_plain),
+        TableWrite(EDGES_DIR, lambda built: edges_staged,
+                   write_bucketed("source"), edge_buckets),
+        TableWrite(NODES_DIR, lambda built: _nodes(built, pruned=True),
+                   write_bucketed("id"), node_buckets),
+    ] + derived, wall_ms=wall_ms, wall_prefix="inc.write.")
     _lap("writes")
-    for dir_ in swap_dirs:
-        _swap_in(os.path.join(out_dir, dir_))
-    for dir_, buckets in pruned_swaps.items():
-        _swap_in_buckets(os.path.join(out_dir, dir_), buckets)
-    bump_estimate_epoch()
     return (
         spark.read.parquet(os.path.join(out_dir, NODES_DIR)).drop("bucket"),
         spark.read.parquet(os.path.join(out_dir, EDGES_DIR)).drop("bucket"),
@@ -678,75 +536,22 @@ def refresh_derived_tables(
     """Re-derive the seven DERIVED tables (communities, community_reports,
     ontology_*, kg_nodes, kg_triplets) from the CURRENT stored core tables
     — the cadence-rollup half of the ``refresh_derived=False`` split. Runs
-    the exact builders ``run_graph_stage`` writes with over the stored
-    edges/nodes/mapping, so at any refresh point every derived table
+    the derived-table builder ``run_graph_stage`` writes with over the
+    stored edges/nodes/mapping, so at any refresh point every derived table
     equals a full rebuild over all triples folded so far. Edge-scale by
     nature (community detection and the densely-numbered relation registry
     are global); per-batch maintenance of these is the cost this function
     moves OFF the fold path. ``salt``/``entity_types``/``community_*``
     must match the values the graph was built with."""
-    from concurrent.futures import ThreadPoolExecutor
-
     edge_agg = spark.read.parquet(os.path.join(out_dir, EDGES_DIR)).select(
         "id", "human_readable_id", "source", "target", "description",
         "weight", "text_unit_ids")
     nodes = spark.read.parquet(os.path.join(out_dir, NODES_DIR)).drop("bucket")
     mapping = spark.read.parquet(os.path.join(out_dir, MAPPING_DIR))
-    canonical_types = canonical_entity_types(spark, mapping, entity_types)
-    ctypes = canonical_types.withColumnRenamed("canonical_id", "entity_id")
-    edge_pairs = edge_agg.select(
-        F.col("source").alias("subject_id"),
-        F.col("target").alias("object_id"),
-        F.col("description").alias("predicate"),
+    builds, writes = derived_table_writes(
+        edge_agg, canonical_entity_types(spark, mapping, entity_types),
+        nodes=lambda built: nodes, salt=salt,
+        community_min_weight=community_min_weight,
+        community_max_degree=community_max_degree,
     )
-
-    def _pooled(pool: str, fn):
-        def run():
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-            return fn()
-        return run
-
-    def _onto_cp():
-        onodes_, orels_, oconns_ = build_ontology(edge_pairs, ctypes)
-        return onodes_, orels_.localCheckpoint(), oconns_
-
-    build_pool = ThreadPoolExecutor(max_workers=2)
-    fut_comm = build_pool.submit(_pooled("cc", lambda: build_community_tables(
-        edge_agg, min_weight=community_min_weight,
-        max_degree=community_max_degree, salt=salt)))
-    fut_onto = build_pool.submit(_pooled("ontology", _onto_cp))
-
-    def plain(df, path):
-        df.write.mode("overwrite").parquet(path)
-
-    def vocab(df, path):
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-
-    wave = [
-        (lambda: fut_onto.result()[0], ONTOLOGY_NODES_DIR, vocab),
-        (lambda: fut_onto.result()[1], ONTOLOGY_RELATIONS_DIR, vocab),
-        (lambda: fut_onto.result()[2], ONTOLOGY_CONNECTIONS_DIR, vocab),
-        (lambda: kg_nodes_table(nodes), KG_NODES_DIR, plain),
-        (lambda: kg_triplets_table(edge_pairs, ctypes, fut_onto.result()[1]),
-         KG_TRIPLETS_DIR, plain),
-        (lambda: fut_comm.result()[0], COMMUNITIES_DIR, plain),
-        (lambda: fut_comm.result()[1], COMMUNITY_REPORTS_DIR, plain),
-    ]
-    try:
-        with ThreadPoolExecutor(max_workers=len(wave)) as side:
-            futs = [
-                side.submit(
-                    lambda t=thunk, p=os.path.join(out_dir, dir_), w=w_:
-                    _stage(t(), p, w))
-                for thunk, dir_, w_ in wave
-            ]
-            for f in futs:
-                f.result()
-    except BaseException:
-        build_pool.shutdown(wait=True, cancel_futures=True)
-        raise
-    else:
-        build_pool.shutdown(wait=False)
-    for _t, dir_, _w in wave:
-        _swap_in(os.path.join(out_dir, dir_))
-    bump_estimate_epoch()
+    run_write_wave(spark, out_dir, builds, writes)

@@ -25,10 +25,11 @@ failed rows and logs, ``kg_agent/chains.py:286-292,377-387``).
 from __future__ import annotations
 
 import os
-import threading
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,6 +96,7 @@ GRAPH_TABLE_DIRS = CORE_TABLE_DIRS + DERIVED_TABLE_DIRS
 # ADVICE r3)
 from deep_reason_spark.functions.broadcast import (  # noqa: E402,F401
     broadcast_if_small,
+    bump_estimate_epoch,
     estimate_bytes,
 )
 
@@ -150,7 +152,6 @@ def run_triples_stage(
     # main write — serialized, the worklist job was ~1 s of pure pre-write
     # latency at the bench corpus (guide §2.6 overlap independent jobs).
     def _collect_work() -> dict:
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "worklist")
         return {
             r["bucket"]: (r["n"], f"{r['h']}:{r['n']}")
             for r in todo_files.groupBy("bucket").agg(
@@ -161,45 +162,43 @@ def run_triples_stage(
         }
 
     work_pool = ThreadPoolExecutor(max_workers=1)
-    work_fut = work_pool.submit(_collect_work)
+    work_fut = work_pool.submit(_pooled(spark, "worklist", _collect_work))
     try:
         n_files_todo = todo_files.count()
-    except BaseException:
-        work_pool.shutdown(wait=True, cancel_futures=True)
-        raise
-    if n_files_todo:
-        # ONE shuffle for the whole extraction path: raw file rows move to
-        # their checkpoint bucket; chunking (intra-row arrays), extraction
-        # (mapInPandas) and the partitioned write all preserve it.
-        # The path-salt keeps a hub repo's bucket from becoming a straggler
-        # task (≤ WRITE_SALT tasks and files per bucket).
-        # Output-file discipline: one file per (bucket, salt) key requires
-        # partitions == keys (hash-partitioning over fewer partitions mixes
-        # buckets into every task → tasks×buckets small files). The salt is
-        # therefore adaptive: 1 on small corpora (64 output files), up to 8
-        # at millions of files (fine-grained balance + hub-repo splitting).
-        write_salt = min(8, max(1, n_files_todo // 25_000))
-        aligned = (
-            todo_files
-            .withColumn("_wsalt", F.pmod(F.xxhash64("path"), F.lit(write_salt)))
-            .repartition(n_buckets * write_salt, "bucket", "_wsalt")
-            .drop("_wsalt")
-        )
-        chunks = chunk_repo_files(aligned.drop("bucket"))
-        triples = extract_triples(
-            chunks, error_acc=err_acc, engine=engine
-        ).withColumn("bucket", bucket_col("repo", n_buckets))
-        try:
+        if n_files_todo:
+            # ONE shuffle for the whole extraction path: raw file rows move
+            # to their checkpoint bucket; chunking (intra-row arrays),
+            # extraction (mapInPandas) and the partitioned write all
+            # preserve it. The path-salt keeps a hub repo's bucket from
+            # becoming a straggler task (≤ WRITE_SALT tasks and files per
+            # bucket). Output-file discipline: one file per (bucket, salt)
+            # key requires partitions == keys (hash-partitioning over fewer
+            # partitions mixes buckets into every task → tasks×buckets
+            # small files). The salt is therefore adaptive: 1 on small
+            # corpora (64 output files), up to 8 at millions of files
+            # (fine-grained balance + hub-repo splitting).
+            write_salt = min(8, max(1, n_files_todo // 25_000))
+            aligned = (
+                todo_files
+                .withColumn("_wsalt", F.pmod(F.xxhash64("path"), F.lit(write_salt)))
+                .repartition(n_buckets * write_salt, "bucket", "_wsalt")
+                .drop("_wsalt")
+            )
+            chunks = chunk_repo_files(aligned.drop("bucket"))
+            triples = extract_triples(
+                chunks, error_acc=err_acc, engine=engine
+            ).withColumn("bucket", bucket_col("repo", n_buckets))
             write_partitioned(
                 triples, os.path.join(out_dir, TRIPLES_DIR), align=False)
-        except BaseException:
-            work_pool.shutdown(wait=True, cancel_futures=True)
-            raise
         wall = int((time.monotonic() - t0) * 1000)
-        # ledger rows: per-bucket row counts of what we just wrote; the
-        # worklist hashes resolve here — by now the side job long finished
-        # under the main write
+        # resolved on EVERY path, the empty work list included, so an error
+        # in the side job always surfaces; by now it long finished under
+        # the main write
         work = work_fut.result()
+    finally:
+        work_pool.shutdown(wait=True, cancel_futures=True)
+    if n_files_todo:
+        # ledger rows: per-bucket row counts of what we just wrote
         todo_buckets = sorted(work)
         written = (
             spark.read.parquet(os.path.join(out_dir, TRIPLES_DIR))
@@ -210,7 +209,6 @@ def run_triples_stage(
         ledger.commit("triples", rows)
         metrics.buckets_processed = len(todo_buckets)
         metrics.extract_errors = err_acc.value
-    work_pool.shutdown(wait=True)
     metrics.wall_ms["triples"] = int((time.monotonic() - t0) * 1000)
     return spark.read.parquet(os.path.join(out_dir, TRIPLES_DIR))
 
@@ -304,6 +302,205 @@ def canonical_entity_types(
     ).localCheckpoint()
 
 
+# ---- the write wave: the ONE commit path of every graph-table writer ------
+# (run_graph_stage, the incremental fold, the derived-table rollup)
+
+
+def _pooled(spark: SparkSession, pool: str, fn: Callable):
+    """``fn`` run in FAIR scheduler pool ``pool``. Pools are fair against
+    each other while jobs WITHIN a pool are FIFO, so a job that runs next
+    to bulk writes — above all the iterative CC micro-jobs — gets its own
+    pool or it queues behind whole write jobs (r3 review finding)."""
+    def run():
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
+        return fn()
+    return run
+
+
+def write_plain(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
+
+
+def write_vocab(df: DataFrame, path: str) -> None:
+    # vocabulary-scale tables (ontology classes/relations/connections, the
+    # block state): the full shuffle-partition fan-out would cost
+    # `spark.sql.shuffle.partitions` near-empty tasks + files per table,
+    # pure commit latency at every scale (r4 scaling)
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def write_bucketed(key: str):
+    """Writer for the two corpus-scale tables (edges by source, nodes by
+    id): ``N_BUCKETS`` hash partitions, each written by the one task that
+    owns it (no tasks × buckets small files)."""
+    def write(df: DataFrame, path: str) -> None:
+        bucket = F.pmod(F.xxhash64(key), F.lit(N_BUCKETS)).cast("int")
+        (df.withColumn("bucket", bucket).repartition("bucket")
+         .write.mode("overwrite").partitionBy("bucket").parquet(path))
+    return write
+
+
+class TableWrite(NamedTuple):
+    """One table of a write wave. ``frame(built)`` returns the frame to
+    write, where ``built(name)`` waits for a build of the same wave;
+    ``writer(df, path)`` writes it. ``buckets`` set = swap in only those
+    ``bucket=`` partitions (the fold's partition-pruned edges/nodes)."""
+    table: str
+    frame: Callable
+    writer: Callable
+    buckets: list | None = None
+
+
+def _stage(df: DataFrame, path: str, writer) -> None:
+    """Write ``df`` to the staging sibling of ``path`` — ``df`` may lazily
+    read the table being replaced, so an in-place overwrite would corrupt
+    its own input; the swap happens later, after EVERY staged write has
+    finished (``_swap_in``)."""
+    staging = path + "__staging"
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+    writer(df, staging)
+
+
+def _swap_in(path: str) -> None:
+    """Atomically promote the staged sibling of ``path`` (a cluster
+    deployment uses a transactional table format or the HDFS rename for
+    the same reason)."""
+    old = path + "__old"
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(path + "__staging", path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def _swap_in_buckets(path: str, buckets: list[int]) -> None:
+    """Partition-pruned promotion: replace ONLY the listed ``bucket=``
+    partitions of ``path`` from its staged sibling; untouched partitions
+    (files, not just rows) stay exactly as written by earlier batches. A
+    bucket absent from staging was emptied by the update (every row moved
+    out by a relabel) and is removed. Same rename-level atomicity and the
+    same residual crash window as the table-level ``_swap_in`` — per
+    bucket instead of per table; a transactional catalog commits the
+    partition list in one operation on a cluster."""
+    staging = path + "__staging"
+    for b in buckets:
+        src = os.path.join(staging, f"bucket={b}")
+        dst = os.path.join(path, f"bucket={b}")
+        old = dst + "__old"
+        if os.path.exists(old):
+            shutil.rmtree(old)
+        if os.path.exists(dst):
+            os.rename(dst, old)
+        if os.path.exists(src):
+            os.rename(src, dst)
+        if os.path.exists(old):
+            shutil.rmtree(old)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
+def run_write_wave(
+    spark: SparkSession,
+    out_dir: str,
+    builds: dict[str, Callable],
+    writes: list[TableWrite],
+    wall_ms: dict | None = None,
+    wall_prefix: str = "",
+) -> None:
+    """Build, stage and commit a set of tables under ``out_dir``.
+
+    ``builds`` ({FAIR pool name: thunk}) start at once, each in its own
+    pool. Every write then runs CONCURRENTLY, resolving the builds it
+    needs, and stages into ``<table>__staging`` (``_stage``): the graph
+    stage is ~30 small jobs, and serialized their fixed scheduling
+    latency dominated it (VERDICT r1 #10). Only after EVERY staged write
+    succeeded are the tables swapped in. On a failure the wave waits for
+    in-flight builds and re-raises with nothing swapped, so the stored
+    graph stays the previous one. ``wall_ms``
+    receives ``<wall_prefix><table>``: per-table wall INCLUDING the build
+    wait, which shows the table that gates the wave."""
+    build_pool = ThreadPoolExecutor(max_workers=len(builds))
+    futs = {name: build_pool.submit(_pooled(spark, name, fn))
+            for name, fn in builds.items()}
+
+    def built(name: str):
+        return futs[name].result()
+
+    def stage(w: TableWrite) -> None:
+        t0 = time.monotonic()
+        _stage(w.frame(built), os.path.join(out_dir, w.table), w.writer)
+        if wall_ms is not None:
+            wall_ms[wall_prefix + w.table] = int((time.monotonic() - t0) * 1000)
+
+    try:
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            for fut in [pool.submit(stage, w) for w in writes]:
+                fut.result()
+        for fut in futs.values():  # a build no write read still raises
+            fut.result()
+    finally:
+        build_pool.shutdown(wait=True, cancel_futures=True)
+    for w in writes:
+        path = os.path.join(out_dir, w.table)
+        if w.buckets is None:
+            _swap_in(path)
+        else:
+            _swap_in_buckets(path, w.buckets)
+    # the tables under out_dir were replaced: drop memoized byte estimates
+    # so plan-identical re-reads of them re-estimate (r4 #3)
+    bump_estimate_epoch()
+
+
+def derived_table_writes(
+    edge_agg: DataFrame,
+    canonical_types: DataFrame,
+    nodes: Callable,
+    salt: int = 0,
+    community_min_weight: int = 2,
+    community_max_degree: int = 64,
+) -> tuple[dict[str, Callable], list[TableWrite]]:
+    """The seven DERIVED tables (ontology_*, kg_nodes, kg_triplets,
+    communities, community_reports) as write-wave builds + writes over an
+    edge aggregate — the single builder behind ``run_graph_stage``, the
+    fold's ``refresh_derived=True`` and ``refresh_derived_tables``, so each
+    refreshed table equals its full-rebuild twin by construction.
+    ``nodes(built)`` returns the full nodes table. The CC runs in its own
+    ``cc`` pool; the ontology relations are pinned once for their own
+    write AND the kg_triplets join."""
+    ctypes = canonical_types.withColumnRenamed("canonical_id", "entity_id")
+    edge_pairs = edge_agg.select(
+        F.col("source").alias("subject_id"), F.col("target").alias("object_id"),
+        F.col("description").alias("predicate"),
+    )
+
+    def ontology():
+        onodes, orels, oconns = build_ontology(edge_pairs, ctypes)
+        return onodes, orels.localCheckpoint(), oconns
+
+    builds = {
+        "cc": lambda: build_community_tables(
+            edge_agg, min_weight=community_min_weight,
+            max_degree=community_max_degree, salt=salt),
+        "ontology": ontology,
+    }
+    writes = [
+        TableWrite(ONTOLOGY_NODES_DIR, lambda b: b("ontology")[0], write_vocab),
+        TableWrite(ONTOLOGY_RELATIONS_DIR, lambda b: b("ontology")[1],
+                   write_vocab),
+        TableWrite(ONTOLOGY_CONNECTIONS_DIR, lambda b: b("ontology")[2],
+                   write_vocab),
+        TableWrite(KG_NODES_DIR, lambda b: kg_nodes_table(nodes(b)),
+                   write_plain),
+        TableWrite(KG_TRIPLETS_DIR, lambda b: kg_triplets_table(
+            edge_pairs, ctypes, b("ontology")[1]), write_plain),
+        TableWrite(COMMUNITIES_DIR, lambda b: b("cc")[0], write_plain),
+        TableWrite(COMMUNITY_REPORTS_DIR, lambda b: b("cc")[1], write_plain),
+    ]
+    return builds, writes
+
+
 def run_graph_stage(
     spark: SparkSession,
     triples: DataFrame,
@@ -387,40 +584,12 @@ def run_graph_stage(
     # (gen_agent/sampling.py:357,390-393; index/community_report.py:6-153);
     # here they are derived deterministically — weight/hub-pruned connected
     # components + the report rollup — so the gen_agent path is
-    # self-contained end-to-end. The stage depends ONLY on the checkpointed
-    # edge_agg, so its iterative CC runs in a side thread OVERLAPPED with
-    # the ontology/nodes builds (job submission is thread-safe; the graph
-    # stage is fixed-latency-bound at this layer, so the overlap absorbs
-    # most of the CC's round latency)
-    def _build_communities():
-        return build_community_tables(
-            edge_agg, min_weight=community_min_weight,
-            max_degree=community_max_degree, salt=salt)
-
-    # daemon thread (an abandoned CC must never block interpreter exit if
-    # a later stage raises) in its own FAIR scheduler pool — pools are
-    # fair-scheduled against each other, while jobs WITHIN a pool are
-    # FIFO, so without the pool split the CC micro-jobs queue behind whole
-    # write jobs (r3 review finding)
-    comm_result: dict = {}
-
-    def _comm_runner():
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "cc")
-        try:
-            comm_result["tables"] = _build_communities()
-        except BaseException as exc:  # noqa: BLE001 — re-raised on join
-            comm_result["error"] = exc
-
-    comm_thread = threading.Thread(
-        target=_comm_runner, daemon=True, name="kg-communities")
-    comm_thread.start()
-
-    def _comm_tables():
-        comm_thread.join()
-        if "error" in comm_result:
-            raise comm_result["error"]
-        return comm_result["tables"]
-
+    # self-contained end-to-end. They, the ontology and the nodes table all
+    # depend only on the checkpointed edge_agg/titles/types, so they are
+    # builds of the write wave: each runs concurrently in its own FAIR pool
+    # and the writes resolve the builds they need, so the independent
+    # writes (mapping, edges) start at once and the builds ride UNDER the
+    # wave (r4 scaling: serialized builds were pure stage latency).
     edges = add_combined_degree(edge_agg)
 
     # The ontology/KgStructure layer is EDGE-scale, never corpus-scale:
@@ -428,118 +597,23 @@ def run_graph_stage(
     # derivable from the aggregated edge table + the entity-type map —
     # re-deriving them from raw triples would rescan the corpus 3×.
     canonical_types = canonical_entity_types(spark, mapping, entity_types)
-
-    ctypes = canonical_types.withColumnRenamed("canonical_id", "entity_id")
-    edge_pairs = edge_agg.select(
-        F.col("source").alias("subject_id"), F.col("target").alias("object_id"),
-        F.col("description").alias("predicate"),
-    )
-
-    # The ontology and nodes builds both depend only on the checkpointed
-    # edge_agg/titles/ctypes, like the community thread — their eager
-    # checkpoint jobs run CONCURRENTLY in their own FAIR pools instead of
-    # back-to-back on the main thread (r4 scaling: the serialized builds
-    # were pure stage latency that does not shrink with cores, dragging
-    # the full-pipeline N→4N efficiency)
-    def _build_ontology_cp():
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "ontology")
-        onodes_, orels_, oconns_ = build_ontology(edge_pairs, ctypes)
-        return onodes_, orels_.localCheckpoint(), oconns_
-
-    def _build_nodes_cp():
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "nodes")
-        return build_nodes_from_edges(
-            edge_agg, titles, entity_types=canonical_types).localCheckpoint()
-
-    build_pool = ThreadPoolExecutor(max_workers=2)
-    fut_onto = build_pool.submit(_build_ontology_cp)
-    fut_nodes = build_pool.submit(_build_nodes_cp)
-    # builds are NOT joined here: the write closures below resolve the
-    # futures they need, so the independent writes (mapping, edges,
-    # communities) start immediately and the ontology/nodes checkpoint
-    # jobs ride UNDER the write wave instead of in front of it (r4
-    # scaling: ~6 s of pre-write build latency at the 4N leg was pure
-    # serial fraction). The lap therefore records only submission time.
+    builds, writes = derived_table_writes(
+        edge_agg, canonical_types, nodes=lambda built: built("nodes"),
+        salt=salt, community_min_weight=community_min_weight,
+        community_max_degree=community_max_degree)
+    builds["nodes"] = lambda: build_nodes_from_edges(
+        edge_agg, titles, entity_types=canonical_types).localCheckpoint()
+    writes += [
+        TableWrite(MAPPING_DIR, lambda built: mapping, write_plain),
+        TableWrite(NODES_DIR, lambda built: built("nodes"), write_bucketed("id")),
+        TableWrite(EDGES_DIR, lambda built: edges, write_bucketed("source")),
+    ]
+    # the builds start inside the wave, so these laps record only their
+    # planning (graph.writes carries the build cost)
     _lap("builds")
     _lap("communities")
-
-    # kg_nodes is a projection of the nodes table (no corpus rescan)
-    def _kg_nodes() -> DataFrame:
-        return kg_nodes_table(fut_nodes.result())
-
-    def _kg_triplets() -> DataFrame:
-        return kg_triplets_table(edge_pairs, ctypes, fut_onto.result()[1])
-
-    # The 10 output tables are independent given their checkpointed inputs;
-    # submitting the writes CONCURRENTLY overlaps their fixed job-scheduling
-    # latency (the graph stage is ~30 small jobs — serialized, their setup
-    # cost dominated the stage and capped full-pipeline scaling at 0.56;
-    # VERDICT r1 #10). Spark job submission is thread-safe.
-    def _write_plain(name: str, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-
-    def _write_vocab(name: str, df: DataFrame) -> None:
-        # ontology classes/relations/connections are VOCABULARY-scale by
-        # construction — writing them through the full shuffle-partition
-        # fan-out costs `spark.sql.shuffle.partitions` near-empty tasks +
-        # files per table, pure commit latency at every scale (r4 scaling)
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, name))
-
-    jobs = [
-        (ONTOLOGY_NODES_DIR,
-         lambda: _write_vocab(ONTOLOGY_NODES_DIR, fut_onto.result()[0])),
-        (ONTOLOGY_RELATIONS_DIR,
-         lambda: _write_vocab(ONTOLOGY_RELATIONS_DIR, fut_onto.result()[1])),
-        (ONTOLOGY_CONNECTIONS_DIR,
-         lambda: _write_vocab(ONTOLOGY_CONNECTIONS_DIR, fut_onto.result()[2])),
-        (KG_NODES_DIR, lambda: _write_plain(KG_NODES_DIR, _kg_nodes())),
-        (KG_TRIPLETS_DIR,
-         lambda: _write_plain(KG_TRIPLETS_DIR, _kg_triplets())),
-        (COMMUNITIES_DIR,
-         lambda: _write_plain(COMMUNITIES_DIR, _comm_tables()[0])),
-        (COMMUNITY_REPORTS_DIR,
-         lambda: _write_plain(COMMUNITY_REPORTS_DIR, _comm_tables()[1])),
-        (MAPPING_DIR, lambda: _write_plain(MAPPING_DIR, mapping)),
-        (NODES_DIR, lambda: write_partitioned(
-            fut_nodes.result().withColumn(
-                "bucket", F.pmod(F.xxhash64("id"), F.lit(N_BUCKETS)).cast("int")),
-            os.path.join(out_dir, NODES_DIR),
-        )),
-        (EDGES_DIR, lambda: write_partitioned(
-            edges.withColumn(
-                "bucket", F.pmod(F.xxhash64("source"), F.lit(N_BUCKETS)).cast("int")),
-            os.path.join(out_dir, EDGES_DIR),
-        )),
-    ]
-
-    def _timed(name: str, thunk) -> None:
-        # per-table wall time INCLUDING the build-future wait — the writes
-        # overlap, so the stage-level lap can't attribute cost; these rows
-        # show which table gates the wave (r5 task: graph.writes latency)
-        w0 = time.monotonic()
-        thunk()
-        metrics.wall_ms[f"graph.write.{name}"] = int(
-            (time.monotonic() - w0) * 1000)
-
-    try:
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            for fut in [pool.submit(_timed, n, j) for n, j in jobs]:
-                fut.result()
-    except BaseException:
-        # a failed write must not leave the ontology/nodes build threads
-        # running Spark jobs after this function has raised (ADVICE r4):
-        # cancel anything not started and WAIT for in-flight builds
-        build_pool.shutdown(wait=True, cancel_futures=True)
-        raise
-    else:
-        # success path: the write closures already resolved every build
-        # future, so nothing is in flight — no need to block on shutdown
-        build_pool.shutdown(wait=False)
-    # every table under out_dir was just overwritten: drop memoized byte
-    # estimates so plan-identical re-reads of them re-estimate (r4 #3)
-    from deep_reason_spark.functions.broadcast import bump_estimate_epoch
-    bump_estimate_epoch()
+    run_write_wave(spark, out_dir, builds, writes,
+                   wall_ms=metrics.wall_ms, wall_prefix="graph.write.")
     _lap("writes")
     metrics.wall_ms["graph"] = int((time.monotonic() - t0) * 1000)
 

@@ -74,6 +74,10 @@ def write_partitioned(
 ) -> None:
     """Idempotent per-bucket write: dynamic partition overwrite replaces only
     the buckets present in ``df`` (re-runs of a bucket are exactly-once).
+    This is the triples stage's resume writer, and the only in-place
+    overwrite left: buckets absent from ``df`` SURVIVE, so a table whose
+    every run must replace it whole (the graph tables) never comes here —
+    those stage, then swap, through ``kg_pipeline.run_write_wave``.
 
     ``align=True`` hash-repartitions on the partition column first so each
     task owns whole buckets — without that, every task can emit a file into

@@ -196,9 +196,9 @@ def stream_maintain_kg(
     at the pre-update state (staging protocol) and the marker unwritten —
     the replay then applies the batch exactly once. The residual window is
     the swap-loop-to-marker interval on the INCREMENTAL path (a few
-    directory renames, the same single-filesystem caveat ``_swap_in``
-    documents; the bootstrap path has no such window — the pending fence
-    covers it); a cluster deployment commits the tables and the marker in
+    directory renames, the same single-filesystem caveat
+    ``kg_pipeline._swap_in`` documents; the bootstrap path has no such
+    window — the pending fence covers it); a cluster deployment commits the tables and the marker in
     ONE transactional-catalog operation to close it.
 
     The marker also records the streaming query id (the checkpoint's

@@ -86,10 +86,18 @@ def test_incremental_update_equals_full_rebuild(spark, tmp_path):
 
 def test_failed_staging_write_leaves_stored_graph_untouched(
         spark, tmp_path, monkeypatch):
-    """The update stages every table then swaps all in: a write failure
-    mid-wave must leave the stored graph at the PRE-update state (no
-    partial swap) and raise the original error."""
-    import deep_reason_spark.plans.incremental_kg as inc
+    """Every graph-table writer — the fold, the derived-table rollup and a
+    full rebuild over an existing graph — goes through the one write wave,
+    which stages every table and swaps only after all staged writes
+    succeeded: a write failure mid-wave must raise the original error,
+    leave all ten stored tables at the PRE-write state (no partial swap),
+    and the next run must succeed."""
+    import shutil
+
+    import pytest
+
+    from deep_reason_spark.plans import kg_pipeline
+    from deep_reason_spark.plans.incremental_kg import refresh_derived_tables
 
     alias_dict = alias_dict_df(spark)
     triples = extract_triples(
@@ -99,36 +107,79 @@ def test_failed_staging_write_leaves_stored_graph_untouched(
     part_b = triples.where(
         F.pmod(F.xxhash64("document_id"), F.lit(3)) == 0).localCheckpoint()
 
-    out = str(tmp_path / "g")
-    run_graph_stage(spark, part_a, alias_dict, out)
-    init_incremental_state(spark, part_a, alias_dict, out)
-    before = {n: _table_rows(spark, out, n) for n in GRAPH_TABLE_DIRS}
-
-    real_stage = inc._stage
-    calls = {"n": 0}
-
-    def failing_stage(df, path, writer):
-        calls["n"] += 1
-        if os.path.basename(path.rstrip("/")) == "communities":
-            raise RuntimeError("disk full (injected)")
-        return real_stage(df, path, writer)
-
-    monkeypatch.setattr(inc, "_stage", failing_stage)
-    try:
-        run_incremental_kg_update(spark, part_b, alias_dict, out)
-        raise AssertionError("expected the injected write failure to raise")
-    except RuntimeError as exc:
-        assert "injected" in str(exc)
-    monkeypatch.setattr(inc, "_stage", real_stage)
-
-    assert calls["n"] > 1  # the wave genuinely ran past the failing table
-    after = {n: _table_rows(spark, out, n) for n in GRAPH_TABLE_DIRS}
-    assert after == before
-    # and the update is still appliable afterwards (state not corrupted)
-    run_incremental_kg_update(spark, part_b, alias_dict, out)
     full_dir = str(tmp_path / "full")
     run_graph_stage(spark, triples, alias_dict, full_dir)
-    _assert_all_tables_equal(spark, out, full_dir)
+    base = str(tmp_path / "base")
+    run_graph_stage(spark, part_a, alias_dict, base)
+    init_incremental_state(spark, part_a, alias_dict, base)
+
+    def prepare_rollup(out):
+        # core tables folded, derived tables still at part_a
+        run_incremental_kg_update(spark, part_b, alias_dict, out,
+                                  refresh_derived=False)
+
+    # writer → (prepare the stored graph, the write under test); each
+    # successful write lands the graph on the full build over `triples`
+    writers = {
+        "fold": (None, lambda out: run_incremental_kg_update(
+            spark, part_b, alias_dict, out)),
+        "rollup": (prepare_rollup,
+                   lambda out: refresh_derived_tables(spark, out)),
+        "rebuild": (None, lambda out: run_graph_stage(
+            spark, triples, alias_dict, out)),
+    }
+    real_stage = kg_pipeline._stage
+    for name, (prepare, write) in writers.items():
+        out = str(tmp_path / name)
+        shutil.copytree(base, out)
+        if prepare is not None:
+            prepare(out)
+        before = {n: _table_rows(spark, out, n) for n in GRAPH_TABLE_DIRS}
+        staged = []
+
+        def failing_stage(df, path, writer):
+            staged.append(path)
+            if os.path.basename(path.rstrip("/")) == "communities":
+                raise RuntimeError("disk full (injected)")
+            return real_stage(df, path, writer)
+
+        monkeypatch.setattr(kg_pipeline, "_stage", failing_stage)
+        with pytest.raises(RuntimeError, match="injected"):
+            write(out)
+        monkeypatch.setattr(kg_pipeline, "_stage", real_stage)
+
+        # the wave genuinely ran past the failing table
+        assert len(staged) > 1, name
+        after = {n: _table_rows(spark, out, n) for n in GRAPH_TABLE_DIRS}
+        assert after == before, name
+        # and the write is still appliable afterwards (state not corrupted)
+        write(out)
+        _assert_all_tables_equal(spark, out, full_dir)
+
+
+def test_rebuild_into_existing_out_dir_replaces_every_table(spark, tmp_path):
+    """run_graph_stage over an existing graph replaces it whole: a rebuild
+    from a 1-triple input equals a fresh build of that input, table for
+    table. Writing edges/nodes in place with dynamic partition overwrite
+    kept every bucket partition absent from the new output, so the
+    rebuilt graph still held the earlier build's edges and nodes."""
+    from deep_reason_spark.datagen import REPO_FILES_SCHEMA
+
+    alias_dict = alias_dict_df(spark)
+    base = extract_triples(
+        chunk_repo_files(generate_repo_files(spark, 40))).localCheckpoint()
+    one_file = spark.createDataFrame(
+        [("org0/proj0", "src/new/file_x.md", "c" * 40, "md",
+          "Zorwex Quofen maintains Mulbal Tarpim.")], REPO_FILES_SCHEMA)
+    one = extract_triples(chunk_repo_files(one_file)).localCheckpoint()
+    assert one.count() == 1
+
+    out = str(tmp_path / "g")
+    run_graph_stage(spark, base, alias_dict, out)
+    run_graph_stage(spark, one, alias_dict, out)
+    fresh = str(tmp_path / "fresh")
+    run_graph_stage(spark, one, alias_dict, fresh)
+    _assert_all_tables_equal(spark, out, fresh)
 
 
 def _snap_buckets(out_dir, table):
@@ -233,19 +284,21 @@ def test_staged_edge_write_partition_prunes_its_read(spark, tmp_path):
     scans = [ln for ln in plan.splitlines() if "Scan parquet" in ln
              or ("FileScan" in ln and "edges" in ln)]
     assert scans, plan
-    # spacing/ordering-tolerant probe (ADVICE r5): require a non-empty
-    # PartitionFilters clause on the bucket column mentioning both bucket
-    # ids, rather than Spark's exact "IN (0,3)" rendering, so a version
-    # bump that reformats the membership predicate (spaces after commas,
-    # reordered literals, IN → OR) cannot fail the test while pruning
-    # still works
+    # the bucket literals the PartitionFilters clause restricts the scan
+    # to must be exactly {0, 3}, whether Spark renders the membership as
+    # `bucket#N IN (0,3)` (any spacing or order) or as `bucket#N = k`
+    # disjuncts; a bare `isnotnull(bucket#N)` or any other bucket set fails
     import re
     for ln in scans:
         m = re.search(r"PartitionFilters: \[([^\]]*)\]", ln)
         assert m, ln
         clause = m.group(1)
-        assert "bucket" in clause and clause.strip(), ln
-        assert re.search(r"\b0\b", clause) and re.search(r"\b3\b", clause), ln
+        values = {int(v) for lits in re.findall(
+            r"\bbucket#\d+\s+IN\s*\(([^)]*)\)", clause)
+            for v in lits.split(",")}
+        values |= {int(v) for v in re.findall(
+            r"\bbucket#\d+\s*=\s*(\d+)\b", clause)}
+        assert values == {0, 3}, ln
 
 
 def test_sparse_relabel_merge_equals_full_rebuild(spark, tmp_path):

@@ -134,6 +134,21 @@ def test_second_run_is_noop(spark, out_dir):
     assert m.buckets_processed == 0
 
 
+def test_worklist_side_job_error_surfaces_when_nothing_to_do(spark, out_dir):
+    """The worklist hash runs as a side job next to the main write; its
+    error must surface on EVERY path — including the resume that finds
+    every bucket committed and writes nothing, where the side job's result
+    used to be dropped unread."""
+    from pyspark.errors import AnalysisException
+
+    rf = generate_repo_files(spark, 40).cache()
+    run_triples_stage(spark, rf, out_dir, n_buckets=4)
+    # every bucket is committed, so no file is processed; the worklist
+    # hash reads `commit`, absent here, so only the side job fails
+    with pytest.raises(AnalysisException, match="commit"):
+        run_triples_stage(spark, rf.drop("commit"), out_dir, n_buckets=4)
+
+
 def test_broadcast_guard_is_byte_aware(spark):
     from deep_reason_spark.plans.kg_pipeline import (
         broadcast_if_small,
